@@ -25,12 +25,14 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from graphscope_spark.runtime.truncate import free_truncated, local_checkpoint
 
 # Absolute row cap for sparse-mode broadcast of an aggregated message
 # table: the relative (threshold * |V|) gate alone lets a 5%-of-2B-vertex
@@ -38,6 +40,8 @@ from pyspark.storagelevel import StorageLevel
 # broadcast hard limit well before narrow ones. Jobs gate on
 # min(threshold * V, BROADCAST_CAP_ROWS).
 BROADCAST_CAP_ROWS = 8_000_000
+
+STATE_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
 class SuperstepJob:
@@ -53,8 +57,6 @@ class SuperstepJob:
     state — so each superstep computes its pipeline exactly once: the
     runner's lineage-truncating localCheckpoint is the only pass over the
     join/agg plan, and the convergence aggregate reads the cached blocks.
-    (A legacy 3-tuple return ``(state, scalars, converged)`` where the
-    job materializes its own state is also accepted.)
 
     ``scalars`` is a JSON-serializable dict of loop-carried values (e.g.
     PageRank's dangling_sum / eps — reference pagerank_networkx.h:94,146).
@@ -82,7 +84,6 @@ class StepMetrics:
     wall_ms: float
     scalars: dict
     checkpointed: bool = False
-    per_partition: list = field(default_factory=list)
 
 
 class SuperstepRunner:
@@ -91,55 +92,11 @@ class SuperstepRunner:
         spark: SparkSession,
         checkpoint_dir: str | None = None,
         checkpoint_every: int = 5,
-        partition_metrics: bool = True,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     ):
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = max(1, checkpoint_every)
-        self.partition_metrics = partition_metrics
-        self.storage_level = storage_level
         self.history: list[StepMetrics] = []
-        self._ckpt_rdd_ids: list[int] = []  # live localCheckpoint block-RDDs
-
-    # ---- localCheckpoint block management ---------------------------------
-    #
-    # DataFrame.unpersist() does NOT free the blocks a localCheckpoint
-    # materialized (they belong to an internal RDD, not the Dataset cache),
-    # so a naive loop leaks one state-sized block set per superstep. The
-    # runner diffs the persistent-RDD registry around the checkpoint call
-    # and explicitly unpersists the previous iteration's block RDDs.
-    #
-    # The diff is filtered to RDDs whose isLocallyCheckpointed() flag is
-    # set: the eager localCheckpoint action can ALSO materialize lazily
-    # registered Dataset caches (the init/reloaded state's persist(), a
-    # graph's edge cache on its first use), and those ids must be neither
-    # tracked (leaking the real block RDD) nor dropped (unpersisting a
-    # live shared cache mid-run).
-
-    def _persistent_ids(self) -> set[int]:
-        m = self.spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in m.keySet().toArray()}
-
-    def _new_ckpt_ids(self, before: set[int]) -> list[int]:
-        m = self.spark.sparkContext._jsc.getPersistentRDDs()
-        out = []
-        for k in m.keySet().toArray():
-            kid = int(k)
-            if kid in before:
-                continue
-            try:
-                if m.get(kid).rdd().isLocallyCheckpointed():
-                    out.append(kid)
-            except Exception:
-                pass  # unknown RDD kind — leave it alone
-        return out
-
-    def _drop_rdds(self, rdd_ids: list[int]) -> None:
-        m = self.spark.sparkContext._jsc.getPersistentRDDs()
-        for rdd_id in rdd_ids:
-            if m.containsKey(rdd_id):
-                m.get(rdd_id).unpersist(False)
 
     # ---- manifest helpers --------------------------------------------------
 
@@ -153,23 +110,21 @@ class SuperstepRunner:
                           scalars: dict, prev_ckpt: int | None) -> DataFrame:
         spath = self._state_path(step)
         state.write.mode("overwrite").parquet(spath)
-        reloaded = self.spark.read.parquet(spath).persist(self.storage_level)
+        reloaded = self.spark.read.parquet(spath).persist(STATE_LEVEL)
 
-        per_part = []
-        if self.partition_metrics:
-            cols = [F.col(c) for c in reloaded.columns]
-            # bit_xor is order-independent and cannot overflow (ANSI mode
-            # is on by default in Spark 4; sum(xxhash64) overflows long).
-            rows = (
-                reloaded.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count("*").alias("rows"),
-                     F.bit_xor(F.xxhash64(*cols)).alias("checksum"))
-                .collect()
-            )
-            per_part = [
-                {"pid": r["pid"], "rows": r["rows"], "checksum": str(r["checksum"])}
-                for r in sorted(rows, key=lambda r: r["pid"])
-            ]
+        cols = [F.col(c) for c in reloaded.columns]
+        # bit_xor is order-independent and cannot overflow (ANSI mode is on
+        # by default in Spark 4; sum(xxhash64) overflows long).
+        rows = (
+            reloaded.groupBy(F.spark_partition_id().alias("pid"))
+            .agg(F.count("*").alias("rows"),
+                 F.bit_xor(F.xxhash64(*cols)).alias("checksum"))
+            .collect()
+        )
+        per_part = [
+            {"pid": r["pid"], "rows": r["rows"], "checksum": str(r["checksum"])}
+            for r in sorted(rows, key=lambda r: r["pid"])
+        ]
 
         manifest = {
             "algo": job.name,
@@ -213,11 +168,12 @@ class SuperstepRunner:
     ) -> tuple[DataFrame, dict]:
         """Run ``job`` to convergence (or ``max_steps``). With
         ``resume=True`` and a readable manifest, restart from the last
-        checkpointed superstep instead of ``init``."""
+        checkpointed superstep instead of ``init``.
+
+        The returned state stays materialized for the caller; release it
+        with ``free_truncated(state)`` (localCheckpoint blocks) and
+        ``state.unpersist()`` (a Parquet-reloaded or initial state)."""
         self.history = []
-        # a previous run()'s final state may still be referenced by the
-        # caller — start tracking fresh rather than dropping its blocks
-        self._ckpt_rdd_ids = []
         start_step = 0
         last_ckpt: int | None = None
 
@@ -228,20 +184,20 @@ class SuperstepRunner:
                     f"resume config mismatch: checkpoint {manifest['config']} "
                     f"!= job {job.config()}"
                 )
-            state = self.spark.read.parquet(manifest["state_path"]).persist(self.storage_level)
+            state = self.spark.read.parquet(manifest["state_path"]).persist(STATE_LEVEL)
             scalars = manifest["scalars"]
             start_step = manifest["step"]
             last_ckpt = manifest["step"]
         else:
             state, scalars = job.init(self.spark)
-            state = state.persist(self.storage_level)
+            state = state.persist(STATE_LEVEL)
 
         converged = scalars.get("converged", False)
         step_no = start_step
         while not converged and step_no < max_steps:
             step_no += 1
             t0 = time.perf_counter()
-            result = job.step(state, step_no, scalars)
+            raw_state, finalize = job.step(state, step_no, scalars)
 
             # Truncate lineage EVERY superstep: the new state's logical
             # plan references the old state several times (contrib +
@@ -249,21 +205,11 @@ class SuperstepRunner:
             # ~3^k with iteration k (SURVEY.md §7.3 risk #1).
             # localCheckpoint materializes the plan ONCE and replaces it
             # with a LogicalRDD; the job's finalize then computes its
-            # scalar aggregates from the materialized blocks.
-            if len(result) == 2 and callable(result[1]):
-                raw_state, finalize = result
-                before = self._persistent_ids()
-                new_state = raw_state.localCheckpoint(eager=True)
-                new_ids = self._new_ckpt_ids(before)
-                scalars, converged = finalize(new_state)
-            else:  # legacy: job materialized (persisted) its own state
-                legacy_state, scalars, converged = result
-                before = self._persistent_ids()
-                new_state = legacy_state.localCheckpoint(eager=True)
-                new_ids = self._new_ckpt_ids(before)
-                legacy_state.unpersist()
-            self._drop_rdds(self._ckpt_rdd_ids)
-            self._ckpt_rdd_ids = new_ids
+            # scalar aggregates from the materialized blocks, and only
+            # then are the previous state's blocks freed.
+            new_state = local_checkpoint(raw_state)
+            scalars, converged = finalize(new_state)
+            free_truncated(state)
 
             checkpointed = False
             if self.checkpoint_dir and (
@@ -271,8 +217,7 @@ class SuperstepRunner:
             ):
                 scalars = dict(scalars, converged=bool(converged))
                 ckpt_state = self._write_checkpoint(job, new_state, step_no, scalars, last_ckpt)
-                self._drop_rdds(self._ckpt_rdd_ids)
-                self._ckpt_rdd_ids = []
+                free_truncated(new_state)
                 new_state = ckpt_state
                 last_ckpt = step_no
                 checkpointed = True

@@ -1,21 +1,31 @@
-"""Lineage truncation with statistics reset.
+"""Lineage truncation and localCheckpoint block ownership.
 
-``DataFrame.localCheckpoint`` truncates the logical plan but carries the
-child plan's *estimated statistics* into the resulting LogicalRDD.
-Spark's size-only estimator multiplies child ``sizeInBytes`` through
-joins as arbitrary-precision integers, so an iterative loop whose state
-plan contains J joins grows the carried stat's bit-length ~J× per
-iteration — after a dozen iterations the driver spends minutes in
-BigInteger.multiply inside stats estimation (observed: 0.4s → 200s per
-Louvain round on a 120-vertex graph, 7 GB driver RSS; jstack pinned
-SizeInBytesOnlyStatsPlanVisitor → BigInteger.multiplyToomCook3).
+``DataFrame.unpersist()`` does NOT free the blocks a localCheckpoint
+materialized: they belong to the locally checkpointed internal RDD, not
+to the Dataset cache. ``local_checkpoint`` therefore reads that RDD off
+the checkpointed plan (its ``LogicalRDD``) and tags the DataFrame with
+it; ``free_truncated`` releases exactly those blocks. Reading the plan,
+rather than diffing the persistent-RDD registry around the action, keeps
+Dataset caches the eager action happens to materialize (a graph's edge
+cache on first use) out of the tag, so freeing a checkpoint never drops
+a live shared cache.
+
+``DataFrame.localCheckpoint`` also carries the child plan's *estimated
+statistics* into the resulting LogicalRDD. Spark's size-only estimator
+multiplies child ``sizeInBytes`` through joins as arbitrary-precision
+integers, so an iterative loop whose state plan contains J joins grows
+the carried stat's bit-length ~J× per iteration — after a dozen
+iterations the driver spends minutes in BigInteger.multiply inside stats
+estimation (observed: 0.4s → 200s per Louvain round on a 120-vertex
+graph, 7 GB driver RSS; jstack pinned SizeInBytesOnlyStatsPlanVisitor →
+BigInteger.multiplyToomCook3).
 
 ``truncate`` therefore rebuilds the DataFrame over the checkpointed
 InternalRow RDD via ``internalCreateDataFrame`` — same blocks, zero-copy,
 default stats. Note the rebuilt plan loses outputPartitioning metadata;
 loops that rely on co-partitioned exchange-free joins (SuperstepRunner)
-keep plain localCheckpoint, whose shallow per-step plans don't compound
-measurably.
+keep plain ``local_checkpoint``, whose shallow per-step plans don't
+compound measurably.
 """
 
 from __future__ import annotations
@@ -23,47 +33,41 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def truncate(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint + stats reset; falls back to the plain
-    checkpoint if the internal constructor is unavailable.
-
-    The returned DataFrame carries its checkpoint block RDD ids in
-    ``_gs_ckpt_rdds`` so loops can free superseded state deterministically
-    (``Truncator``) instead of waiting on Python GC + ContextCleaner —
-    ``df.unpersist()`` does NOT free localCheckpoint blocks."""
-    sc = df.sparkSession.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+def local_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint whose result carries its block RDD in
+    ``_gs_ckpt_rdd`` so ``free_truncated`` can release it."""
     ckpt = df.localCheckpoint(eager=True)
-    after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    new_ids = sorted(int(i) for i in (after - before))
-    try:
-        spark = df.sparkSession
-        jdf = ckpt._jdf
-        fresh = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False)
-        out = DataFrame(fresh, spark)
-    except Exception:  # pragma: no cover - version-dependent fallback
-        out = ckpt
-    out._gs_ckpt_rdds = new_ids
+    plan = ckpt._jdf.queryExecution().logical()
+    if plan.nodeName() != "LogicalRDD":
+        raise RuntimeError(
+            f"localCheckpoint produced a {plan.nodeName()} plan, expected "
+            "LogicalRDD: its blocks could not be released")
+    ckpt._gs_ckpt_rdd = plan.rdd()
+    return ckpt
+
+
+def truncate(df: DataFrame) -> DataFrame:
+    """``local_checkpoint`` + stats reset; the result carries the same
+    block tag. Free superseded state with ``free_truncated`` (or a
+    ``Truncator``) instead of waiting on Python GC + ContextCleaner."""
+    ckpt = local_checkpoint(df)
+    spark = df.sparkSession
+    jdf = ckpt._jdf
+    out = DataFrame(spark._jsparkSession.internalCreateDataFrame(
+        jdf.queryExecution().toRdd(), jdf.schema(), False), spark)
+    out._gs_ckpt_rdd = ckpt._gs_ckpt_rdd
     return out
 
 
 def free_truncated(df: DataFrame | None) -> None:
-    """Unpersist the checkpoint block RDDs a ``truncate`` call created.
-    Only call once the data is provably dead (localCheckpoint destroys
-    lineage — a freed block cannot be recomputed)."""
-    if df is None:
-        return
-    ids = getattr(df, "_gs_ckpt_rdds", None)
-    if not ids:
-        return
-    sc = df.sparkSession.sparkContext
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in ids:
-        jrdd = jmap.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
-    df._gs_ckpt_rdds = []
+    """Unpersist the localCheckpoint blocks ``df`` carries (a no-op for an
+    untagged DataFrame). Only call once the data is provably dead
+    (localCheckpoint destroys lineage — a freed block cannot be
+    recomputed)."""
+    rdd = getattr(df, "_gs_ckpt_rdd", None)
+    if rdd is not None:
+        rdd.unpersist(False)
+        df._gs_ckpt_rdd = None
 
 
 class Truncator:

@@ -13,6 +13,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEM`` is unset: min(24g, half of
+    physical RAM), leaving room for off-heap memory and Python workers
+    on small machines."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    half_mb = ram // 2 // (1 << 20)
+    return f"{min(24 * 1024, half_mb)}m"
+
+
 def build_session(
     cpus: int | None = None,
     app_name: str = "graphscope-spark",
@@ -53,7 +62,8 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # iterative jobs re-read persisted state; keep blocks compact
         .config("spark.sql.inMemoryColumnarStorage.compressed", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )

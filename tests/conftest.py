@@ -39,6 +39,14 @@ def power_law_graph(n=300, m=1200, seed=42, with_dangling=True):
     return vertices, sorted(edges)
 
 
+def cache_builder(spark, df):
+    """The JVM CachedRDDBuilder behind ``df``'s Dataset cache. Its
+    ``cachedColumnBuffers()`` is the RDD whose blocks hold the cache (and
+    builds it if the cache was never materialized)."""
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    return cached.get().cachedRepresentation().cacheBuilder()
+
+
 @pytest.fixture(scope="session")
 def small_graph():
     return power_law_graph(n=300, m=1200, seed=42)

@@ -7,7 +7,8 @@ from __future__ import annotations
 import pytest
 
 from graphscope_spark import LinkGraph
-from tests.conftest import power_law_graph
+from graphscope_spark.runtime.truncate import Truncator
+from tests.conftest import cache_builder, power_law_graph
 
 
 def _persistent_count(spark) -> int:
@@ -83,4 +84,21 @@ def test_triangles_reuse_cached_orientation(spark):
         gs.triangles(g).count()
     after = _persistent_count(spark)
     assert after <= before, f"triangles leaked {after - before} RDD(s)"
+    g.unpersist_all()
+
+
+def test_truncator_close_keeps_shared_edge_cache(spark):
+    """Freeing a Truncator slot releases only its own localCheckpoint
+    blocks. The eager checkpoint also materializes the graph's lazily
+    persisted edge cache; a registry diff around the action used to tag
+    that cache too, and close() dropped it under the live Dataset."""
+    g = _mk(spark)
+    builder = cache_builder(spark, g.edges)
+    assert not builder.isCachedColumnBuffersLoaded()
+    t = Truncator()
+    assert t(g.edges.groupBy("dst").count(), "s").count() > 0
+    t.close()
+    edge_rdd = builder.cachedColumnBuffers().id()
+    assert spark.sparkContext._jsc.getPersistentRDDs().containsKey(edge_rdd), \
+        "Truncator.close() unpersisted the graph's edge cache"
     g.unpersist_all()

@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import LinkGraph
+from tests.conftest import cache_builder
 
 
 def _lc_ids(spark):
@@ -41,8 +42,29 @@ def test_runner_tracks_only_checkpoint_rdds(spark, small_graph):
     out.count()
     new_lc = [i for i in _lc_ids(spark) if i not in before]
     assert len(new_lc) <= 1, f"leaked localCheckpoint RDDs: {new_lc}"
-    # the shared edge cache must NOT have been unpersisted mid-run
-    assert g.edges.storageLevel.useMemory or g.edges.storageLevel.useDisk
+    # the shared edge cache's blocks must NOT have been unpersisted
+    # mid-run (storageLevel reads the CacheManager entry, which survives
+    # an unpersist of the RDD underneath it)
+    edge_rdd = cache_builder(spark, g.edges).cachedColumnBuffers().id()
+    assert spark.sparkContext._jsc.getPersistentRDDs().containsKey(edge_rdd)
+    g.unpersist_all()
+
+
+def test_runner_final_state_is_releasable(spark, small_graph):
+    """The runner's final state carries its localCheckpoint tag, so
+    ``free_truncated`` releases the last block set too."""
+    from graphscope_spark.operators.wcc import WCCJob
+    from graphscope_spark.runtime.superstep import SuperstepRunner
+    from graphscope_spark.runtime.truncate import free_truncated
+
+    vertices, edges = small_graph
+    g = LinkGraph(spark, spark.createDataFrame(edges, "src LONG, dst LONG"))
+    before = set(_lc_ids(spark))
+    state, _ = SuperstepRunner(spark).run(WCCJob(g))
+    assert state.count() == len({v for e in edges for v in e})
+    free_truncated(state)
+    leaked = set(_lc_ids(spark)) - before
+    assert not leaked, f"final state blocks still registered: {leaked}"
     g.unpersist_all()
 
 
