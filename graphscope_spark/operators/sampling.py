@@ -38,7 +38,7 @@ def sampling_path(graph: LinkGraph, num_paths: int = 100, length: int = 3,
         F.row_number().over(Window.partitionBy("src").orderBy("dst")) - 1,
     )
     deg = adj.groupBy("src").agg(F.count("*").alias("deg"))
-    adj = truncate(adj.join(deg, "src")).persist(StorageLevel.MEMORY_AND_DISK)
+    adj = truncate(adj.join(deg, "src"))
 
     n = graph.num_vertices
     # dense 0..n-1 vertex ranks via the two-level per-partition numbering
@@ -66,7 +66,6 @@ def sampling_path(graph: LinkGraph, num_paths: int = 100, length: int = 3,
         ended = state.join(nxt.select("walk_id"), "walk_id", "left_anti")
         state = t(nxt.unionByName(ended), "state")
     free_truncated(adj)
-    adj.unpersist()
     return state.select("walk_id", "path")
 
 

@@ -11,11 +11,13 @@ action).
 
 What Spark adds that the reference never needed (SURVEY.md §7.3 risk #1):
 an iterative DataFrame loop grows its logical plan without bound, so the
-runner persists each state, unpersists the previous one, and every
-``checkpoint_every`` steps writes the state to Parquet and re-reads it —
-truncating lineage — together with a JSON manifest capturing loop-carried
-scalars and per-partition metrics (rows + xxhash64 checksum + timing). The
-manifest makes a killed job resumable mid-iteration (north-rule
+runner truncates lineage every superstep: the state lives in one
+``Truncator`` slot, which materializes each new state before it frees the
+previous one. Every ``checkpoint_every`` steps the runner also writes
+the state to Parquet, together with a JSON manifest capturing
+loop-carried scalars and per-partition metrics (rows + xxhash64 checksum,
+computed from the same blocks; partition ``pid`` is file ``part-<pid>``).
+The manifest makes a killed job resumable mid-iteration (north-rule
 requirement; replaces vineyard persistence, reference
 grape_instance.cc:302-306).
 """
@@ -30,9 +32,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from graphscope_spark.runtime.truncate import free_truncated, local_checkpoint
+from graphscope_spark.runtime.truncate import Truncator
 
 # Absolute row cap for sparse-mode broadcast of an aggregated message
 # table: the relative (threshold * |V|) gate alone lets a 5%-of-2B-vertex
@@ -40,8 +41,6 @@ from graphscope_spark.runtime.truncate import free_truncated, local_checkpoint
 # broadcast hard limit well before narrow ones. Jobs gate on
 # min(threshold * V, BROADCAST_CAP_ROWS).
 BROADCAST_CAP_ROWS = 8_000_000
-
-STATE_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
 class SuperstepJob:
@@ -55,8 +54,9 @@ class SuperstepJob:
     step's scalar aggregations (the reference's ``Sum()`` all-reduces,
     pagerank_networkx.h:146) *after* the runner has materialized the new
     state — so each superstep computes its pipeline exactly once: the
-    runner's lineage-truncating localCheckpoint is the only pass over the
-    join/agg plan, and the convergence aggregate reads the cached blocks.
+    runner's ``truncate`` is the only pass over the join/agg plan, and the
+    convergence aggregate reads the checkpoint blocks. ``finalize`` must
+    not read the previous state: its blocks are already freed.
 
     ``scalars`` is a JSON-serializable dict of loop-carried values (e.g.
     PageRank's dangling_sum / eps — reference pagerank_networkx.h:94,146).
@@ -107,16 +107,18 @@ class SuperstepRunner:
         return os.path.join(self.checkpoint_dir, f"step_{step:05d}", "state")
 
     def _write_checkpoint(self, job: SuperstepJob, state: DataFrame, step: int,
-                          scalars: dict, prev_ckpt: int | None) -> DataFrame:
+                          scalars: dict, prev_ckpt: int | None) -> None:
         spath = self._state_path(step)
+        # ``state`` is a truncated LogicalRDD: the write runs one task per
+        # block partition, so partition ``pid`` lands in file part-<pid>
+        # and the metrics below describe exactly those files
         state.write.mode("overwrite").parquet(spath)
-        reloaded = self.spark.read.parquet(spath).persist(STATE_LEVEL)
 
-        cols = [F.col(c) for c in reloaded.columns]
+        cols = [F.col(c) for c in state.columns]
         # bit_xor is order-independent and cannot overflow (ANSI mode is on
         # by default in Spark 4; sum(xxhash64) overflows long).
         rows = (
-            reloaded.groupBy(F.spark_partition_id().alias("pid"))
+            state.groupBy(F.spark_partition_id().alias("pid"))
             .agg(F.count("*").alias("rows"),
                  F.bit_xor(F.xxhash64(*cols)).alias("checksum"))
             .collect()
@@ -144,7 +146,6 @@ class SuperstepRunner:
             json.dump(manifest, f, indent=1)
         with open(os.path.join(self.checkpoint_dir, "LATEST"), "w") as f:
             f.write(str(step))
-        return reloaded
 
     def latest_checkpoint(self) -> dict | None:
         if not self.checkpoint_dir:
@@ -171,11 +172,11 @@ class SuperstepRunner:
         checkpointed superstep instead of ``init``.
 
         The returned state stays materialized for the caller; release it
-        with ``free_truncated(state)`` (localCheckpoint blocks) and
-        ``state.unpersist()`` (a Parquet-reloaded or initial state)."""
+        with ``free_truncated(state)``."""
         self.history = []
         start_step = 0
         last_ckpt: int | None = None
+        slot = Truncator()
 
         manifest = self.latest_checkpoint() if resume else None
         if manifest is not None:
@@ -184,13 +185,13 @@ class SuperstepRunner:
                     f"resume config mismatch: checkpoint {manifest['config']} "
                     f"!= job {job.config()}"
                 )
-            state = self.spark.read.parquet(manifest["state_path"]).persist(STATE_LEVEL)
+            state = slot(self.spark.read.parquet(manifest["state_path"]))
             scalars = manifest["scalars"]
             start_step = manifest["step"]
             last_ckpt = manifest["step"]
         else:
             state, scalars = job.init(self.spark)
-            state = state.persist(STATE_LEVEL)
+            state = slot(state)
 
         converged = scalars.get("converged", False)
         step_no = start_step
@@ -202,28 +203,22 @@ class SuperstepRunner:
             # Truncate lineage EVERY superstep: the new state's logical
             # plan references the old state several times (contrib +
             # apply join), so without truncation analysis cost grows
-            # ~3^k with iteration k (SURVEY.md §7.3 risk #1).
-            # localCheckpoint materializes the plan ONCE and replaces it
-            # with a LogicalRDD; the job's finalize then computes its
-            # scalar aggregates from the materialized blocks, and only
-            # then are the previous state's blocks freed.
-            new_state = local_checkpoint(raw_state)
-            scalars, converged = finalize(new_state)
-            free_truncated(state)
+            # ~3^k with iteration k (SURVEY.md §7.3 risk #1). The slot
+            # materializes the plan ONCE into checkpoint blocks and only
+            # then frees the previous state's blocks; the job's finalize
+            # computes its scalar aggregates from the new blocks.
+            state = slot(raw_state)
+            scalars, converged = finalize(state)
 
             checkpointed = False
             if self.checkpoint_dir and (
                 converged or step_no % self.checkpoint_every == 0
             ):
                 scalars = dict(scalars, converged=bool(converged))
-                ckpt_state = self._write_checkpoint(job, new_state, step_no, scalars, last_ckpt)
-                free_truncated(new_state)
-                new_state = ckpt_state
+                self._write_checkpoint(job, state, step_no, scalars, last_ckpt)
                 last_ckpt = step_no
                 checkpointed = True
 
-            state.unpersist()
-            state = new_state
             m = StepMetrics(
                 step=step_no,
                 wall_ms=(time.perf_counter() - t0) * 1000.0,

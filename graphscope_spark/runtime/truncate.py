@@ -1,31 +1,27 @@
 """Lineage truncation and localCheckpoint block ownership.
 
+``truncate`` is the engine's one lineage-truncation primitive: the
+superstep runner and every driver-side loop use it.
+
+It runs an eager ``localCheckpoint`` and reads the checkpoint's
+``LogicalRDD`` off the plan. That node carries the child plan's
+*estimated statistics*; Spark's size-only estimator multiplies child
+``sizeInBytes`` through joins as arbitrary-precision integers, so a loop
+whose state plan contains J joins would grow the carried stat's
+bit-length ~J× per iteration (observed: 0.4s → 200s per Louvain round on
+a 120-vertex graph, 7 GB driver RSS, in BigInteger.multiply inside stats
+estimation). ``truncate`` therefore re-wraps the same node without its
+carried stats: same blocks, same output partitioning and ordering (so
+co-partitioned joins stay exchange-free), default stats.
+
 ``DataFrame.unpersist()`` does NOT free the blocks a localCheckpoint
 materialized: they belong to the locally checkpointed internal RDD, not
-to the Dataset cache. ``local_checkpoint`` therefore reads that RDD off
-the checkpointed plan (its ``LogicalRDD``) and tags the DataFrame with
-it; ``free_truncated`` releases exactly those blocks. Reading the plan,
-rather than diffing the persistent-RDD registry around the action, keeps
-Dataset caches the eager action happens to materialize (a graph's edge
-cache on first use) out of the tag, so freeing a checkpoint never drops
-a live shared cache.
-
-``DataFrame.localCheckpoint`` also carries the child plan's *estimated
-statistics* into the resulting LogicalRDD. Spark's size-only estimator
-multiplies child ``sizeInBytes`` through joins as arbitrary-precision
-integers, so an iterative loop whose state plan contains J joins grows
-the carried stat's bit-length ~J× per iteration — after a dozen
-iterations the driver spends minutes in BigInteger.multiply inside stats
-estimation (observed: 0.4s → 200s per Louvain round on a 120-vertex
-graph, 7 GB driver RSS; jstack pinned SizeInBytesOnlyStatsPlanVisitor →
-BigInteger.multiplyToomCook3).
-
-``truncate`` therefore rebuilds the DataFrame over the checkpointed
-InternalRow RDD via ``internalCreateDataFrame`` — same blocks, zero-copy,
-default stats. Note the rebuilt plan loses outputPartitioning metadata;
-loops that rely on co-partitioned exchange-free joins (SuperstepRunner)
-keep plain ``local_checkpoint``, whose shallow per-step plans don't
-compound measurably.
+to the Dataset cache. ``truncate`` tags its result with that RDD, read
+off the plan, and ``free_truncated`` releases exactly those blocks.
+Reading the plan, rather than diffing the persistent-RDD registry around
+the action, keeps Dataset caches the eager action happens to materialize
+(a graph's edge cache on first use) out of the tag, so freeing a
+checkpoint never drops a live shared cache.
 """
 
 from __future__ import annotations
@@ -33,29 +29,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def local_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint whose result carries its block RDD in
-    ``_gs_ckpt_rdd`` so ``free_truncated`` can release it."""
-    ckpt = df.localCheckpoint(eager=True)
-    plan = ckpt._jdf.queryExecution().logical()
+def truncate(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint of ``df`` with its carried stats dropped; the
+    result carries its block RDD in ``_gs_ckpt_rdd``. Free superseded
+    state with ``free_truncated`` (or a ``Truncator``) instead of waiting
+    on Python GC + ContextCleaner."""
+    spark = df.sparkSession
+    plan = df.localCheckpoint(eager=True)._jdf.queryExecution().logical()
     if plan.nodeName() != "LogicalRDD":
         raise RuntimeError(
             f"localCheckpoint produced a {plan.nodeName()} plan, expected "
             "LogicalRDD: its blocks could not be released")
-    ckpt._gs_ckpt_rdd = plan.rdd()
-    return ckpt
-
-
-def truncate(df: DataFrame) -> DataFrame:
-    """``local_checkpoint`` + stats reset; the result carries the same
-    block tag. Free superseded state with ``free_truncated`` (or a
-    ``Truncator``) instead of waiting on Python GC + ContextCleaner."""
-    ckpt = local_checkpoint(df)
-    spark = df.sparkSession
-    jdf = ckpt._jdf
-    out = DataFrame(spark._jsparkSession.internalCreateDataFrame(
-        jdf.queryExecution().toRdd(), jdf.schema(), False), spark)
-    out._gs_ckpt_rdd = ckpt._gs_ckpt_rdd
+    jvm, jspark = spark._jvm, spark._jsparkSession
+    no_stats = jvm.scala.Option.empty()
+    bare = plan.copy(plan.output(), plan.rdd(), plan.outputPartitioning(),
+                     plan.outputOrdering(), plan.isStreaming(), plan.stream(),
+                     jspark, no_stats, no_stats)
+    out = DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jspark, bare), spark)
+    out._gs_ckpt_rdd = plan.rdd()
     return out
 
 

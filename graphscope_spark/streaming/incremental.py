@@ -29,7 +29,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphscope_spark.runtime.truncate import Truncator
+from graphscope_spark.runtime.truncate import Truncator, free_truncated
 
 
 class _PublishedDir:
@@ -268,6 +268,7 @@ class IncrementalPageRank:
             state, _ = runner.run(job, max_steps=self.max_iter + 1)
             self.iterations_history.append(len(runner.history))
             self._ranks.publish(state.select("vid", "rank"))
+            free_truncated(state)
         finally:
             g.unpersist_all()
 

@@ -47,6 +47,14 @@ def cache_builder(spark, df):
     return cached.get().cachedRepresentation().cacheBuilder()
 
 
+def lc_rdd_ids(spark):
+    """Ids of the locally checkpointed RDDs still registered as
+    persistent: the live localCheckpoint block sets."""
+    m = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in m.keySet().toArray()
+            if m.get(int(k)).rdd().isLocallyCheckpointed()}
+
+
 @pytest.fixture(scope="session")
 def small_graph():
     return power_law_graph(n=300, m=1200, seed=42)

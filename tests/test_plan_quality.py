@@ -1,5 +1,6 @@
 """Physical-plan regression guards: the properties that make the engine
-scale must survive refactors — one exchange per superstep, no broadcast
+scale must survive refactors — one exchange per superstep (AQE off), no
+lineage-truncated state carrying compounding stats, no broadcast
 of O(V) state, parquet pushdown, no cartesian products in the subgraph
 templates. Checked by parsing `.explain` output (the same spot checks
 BASELINE.md records, now enforced)."""
@@ -33,7 +34,10 @@ def _mk(spark, n=2000, m=8000, seed=5, parts=None):
         num_partitions=parts)
 
 
-def test_pagerank_step_single_exchange_no_state_broadcast(spark):
+@pytest.mark.parametrize("checkpoint_every", [None, 2],
+                         ids=["no_checkpoint", "checkpoint_every_2"])
+def test_pagerank_step_single_exchange_no_state_broadcast(
+        spark, tmp_path, checkpoint_every):
     from graphscope_spark.operators.pagerank import PageRankJob
     from graphscope_spark.runtime.superstep import SuperstepRunner
 
@@ -41,7 +45,13 @@ def test_pagerank_step_single_exchange_no_state_broadcast(spark):
     try:
         # default partitioning (= shuffle partitions) → exchange-free joins
         g = _mk(spark)
-        runner = SuperstepRunner(spark)
+        if checkpoint_every is None:
+            runner = SuperstepRunner(spark)
+        else:
+            # a Parquet checkpoint at step 2 must not cost the next step
+            # the state's partitioning
+            runner = SuperstepRunner(spark, checkpoint_dir=str(tmp_path / "ckpt"),
+                                     checkpoint_every=checkpoint_every)
         # run two steps so the state side is a truncated LogicalRDD with
         # stable partitioning, then inspect the third step's plan
         job = PageRankJob(g, tol=0.0, max_iter=100)
@@ -62,6 +72,43 @@ def test_pagerank_step_single_exchange_no_state_broadcast(spark):
         g.unpersist_all()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def test_truncate_keeps_hash_partitioning(spark):
+    """``truncate`` keeps the checkpointed plan's output partitioning, so
+    a co-partitioned join downstream stays exchange-free."""
+    from graphscope_spark.runtime.truncate import free_truncated, truncate
+
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        g = _mk(spark)
+        t = truncate(g.out_degrees())
+        part = t._jdf.queryExecution().executedPlan().outputPartitioning()
+        assert part.toString().startswith("hashpartitioning(vid"), part.toString()
+        free_truncated(t)
+        g.unpersist_all()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def test_runner_state_stats_do_not_grow(spark):
+    """The runner state's size estimate is reset every superstep: after
+    12 PageRank steps it equals the estimate after 2 (carried stats
+    would multiply through the step's joins, ~15 bits per step)."""
+    from graphscope_spark.operators.pagerank import PageRankJob
+    from graphscope_spark.runtime.superstep import SuperstepRunner
+    from graphscope_spark.runtime.truncate import free_truncated
+
+    g = _mk(spark, n=300, m=1200)
+    sizes = []
+    for steps in (2, 12):
+        state, _ = SuperstepRunner(spark).run(
+            PageRankJob(g, tol=0.0, max_iter=100), max_steps=steps)
+        stats = state._jdf.queryExecution().optimizedPlan().stats()
+        sizes.append(int(str(stats.sizeInBytes())))
+        free_truncated(state)
+    assert sizes[1] == sizes[0], sizes
+    g.unpersist_all()
 
 
 def test_pagerank_push_step_single_exchange_no_state_broadcast(spark):

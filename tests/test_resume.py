@@ -79,16 +79,57 @@ def test_checkpoint_partition_checksums_detect_corruption(spark, tmp_path):
     """The per-partition checksums in the manifest are real: recomputing
     them over the checkpointed parquet reproduces the manifest, and a
     corrupted state file no longer matches."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from graphscope_spark.operators.wcc import WCCJob
     from graphscope_spark.runtime.superstep import SuperstepRunner
 
-    g = _graph(spark)
-    ckpt = str(tmp_path / "wcc_ckpt")
-    r = SuperstepRunner(spark, checkpoint_dir=ckpt, checkpoint_every=1)
-    r.run(WCCJob(g), max_steps=2)
+    # no AQE coalescing: the state keeps several partitions, so the
+    # checkpoint spans several part files
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try:
+        g = _graph(spark)
+        ckpt = str(tmp_path / "wcc_ckpt")
+        r = SuperstepRunner(spark, checkpoint_dir=ckpt, checkpoint_every=1)
+        r.run(WCCJob(g), max_steps=2)
+    finally:
+        spark.conf.set(key, "true")
     man = r.latest_checkpoint()
-    total_rows = sum(p["rows"] for p in man["per_partition"])
-    assert total_rows == spark.read.parquet(man["state_path"]).count()
+    want = {p["pid"]: (p["rows"], p["checksum"]) for p in man["per_partition"]}
+    assert len(want) > 1
+
+    def per_file():
+        df = spark.read.parquet(man["state_path"])
+        pid = F.regexp_extract(F.input_file_name(), r"part-(\d+)", 1)
+        rows = (df.groupBy(pid.cast("int").alias("pid"))
+                .agg(F.count("*").alias("rows"),
+                     F.bit_xor(F.xxhash64(*df.columns)).alias("checksum"))
+                .collect())
+        return {r["pid"]: (r["rows"], str(r["checksum"])) for r in rows}
+
+    assert per_file() == want
+
+    # change one value in one part file (and drop its .crc sidecar, which
+    # would otherwise fail the read before any checksum is computed)
+    victim = sorted(glob.glob(os.path.join(man["state_path"], "part-*")))[0]
+    crc = os.path.join(os.path.dirname(victim), f".{os.path.basename(victim)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    t = pq.read_table(victim)
+    i = t.column_names.index("comp")
+    comp = t.column(i).to_pylist()
+    comp[0] += 1
+    pq.write_table(t.set_column(i, t.field(i), pa.array(comp, t.field(i).type)),
+                   victim)
+    vpid = int(os.path.basename(victim).split("-")[1])
+    got = per_file()
+    assert got[vpid][0] == want[vpid][0]
+    assert got[vpid][1] != want[vpid][1], "corrupted part file still matches"
+    assert {p: v for p, v in got.items() if p != vpid} == \
+        {p: v for p, v in want.items() if p != vpid}
     g.unpersist_all()

@@ -20,13 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import LinkGraph
-from tests.conftest import cache_builder
-
-
-def _lc_ids(spark):
-    m = spark.sparkContext._jsc.getPersistentRDDs()
-    return [int(k) for k in m.keySet().toArray()
-            if m.get(int(k)).rdd().isLocallyCheckpointed()]
+from tests.conftest import cache_builder, lc_rdd_ids
 
 
 def test_runner_tracks_only_checkpoint_rdds(spark, small_graph):
@@ -37,10 +31,10 @@ def test_runner_tracks_only_checkpoint_rdds(spark, small_graph):
 
     vertices, edges = small_graph
     g = LinkGraph(spark, spark.createDataFrame(edges, "src LONG, dst LONG"))
-    before = set(_lc_ids(spark))
+    before = lc_rdd_ids(spark)
     out = wcc(g)
     out.count()
-    new_lc = [i for i in _lc_ids(spark) if i not in before]
+    new_lc = lc_rdd_ids(spark) - before
     assert len(new_lc) <= 1, f"leaked localCheckpoint RDDs: {new_lc}"
     # the shared edge cache's blocks must NOT have been unpersisted
     # mid-run (storageLevel reads the CacheManager entry, which survives
@@ -59,11 +53,11 @@ def test_runner_final_state_is_releasable(spark, small_graph):
 
     vertices, edges = small_graph
     g = LinkGraph(spark, spark.createDataFrame(edges, "src LONG, dst LONG"))
-    before = set(_lc_ids(spark))
+    before = lc_rdd_ids(spark)
     state, _ = SuperstepRunner(spark).run(WCCJob(g))
     assert state.count() == len({v for e in edges for v in e})
     free_truncated(state)
-    leaked = set(_lc_ids(spark)) - before
+    leaked = lc_rdd_ids(spark) - before
     assert not leaked, f"final state blocks still registered: {leaked}"
     g.unpersist_all()
 

@@ -283,6 +283,25 @@ def test_incremental_pagerank_replay_is_idempotent(spark, tmp_path):
     assert inc2.ranks() is not None
 
 
+def test_incremental_pagerank_frees_published_state(spark, tmp_path):
+    """Each micro-batch's converged PageRank state is released once it
+    is published: a long-running sink must not keep one localCheckpoint
+    block set per batch."""
+    from graphscope_spark.streaming import IncrementalPageRank
+    from tests.conftest import lc_rdd_ids
+
+    inc = IncrementalPageRank(spark, str(tmp_path / "prstate"), tol=1e-8)
+    ring = spark.createDataFrame(
+        [(i, (i + 1) % 10) for i in range(10)], "src LONG, dst LONG")
+    chord = spark.createDataFrame([(0, 5), (5, 2)], "src LONG, dst LONG")
+    before = lc_rdd_ids(spark)
+    inc.process_batch(ring, batch_id=0)
+    inc.process_batch(chord, batch_id=1)
+    leaked = lc_rdd_ids(spark) - before
+    assert not leaked, f"micro-batch states still registered: {leaked}"
+    assert inc.ranks().count() == 10
+
+
 def test_published_dir_survives_partial_swap(spark, tmp_path):
     """_PublishedDir: the CURRENT pointer always names a complete table;
     a leftover version directory from a crashed attempt is ignored and
